@@ -1751,6 +1751,8 @@ def attach_hash_embed_with_buckets(
     def both(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
 
+        if len(texts) == 0:
+            return pd.DataFrame({"emb": [], "bkts": []}, dtype=object)
         V, null = _hash_embed_batch(texts, dim)
         # strict > 0, matching hyperplane_buckets_all / the JVM face
         b = (V @ H) > 0
@@ -1961,6 +1963,8 @@ def attach_hash_embed_with_unit(
     def both(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
 
+        if len(texts) == 0:
+            return pd.DataFrame({"emb": [], "unit": []}, dtype=object)
         V, null = _hash_embed_batch(texts, dim)
         # the exact _normalize_arrow ops, applied to the same matrix
         n = np.maximum(np.sqrt((V * V).sum(axis=1)), 1e-12)

@@ -125,8 +125,12 @@ def fan_out_scan(df: DataFrame, key: tuple[str, ...] | None = None) -> DataFrame
 # resolved path) — every run still scans the parquet data; nothing
 # result-shaped is cached. Keyed by (full path, mtime) — ADVICE r17:
 # a path-only key would serve a stale schema to a process that
-# rewrites a table in place; the mtime component (one stat per read,
-# ~µs) invalidates the entry whenever the file or directory changes.
+# rewrites a table. The mtime component (one stat per read, ~µs) is the
+# path's own. A single-file table changes it on every write. A directory
+# table (Spark's own output layout) changes it only when a part file is
+# added, removed or overwritten by a new file, not when an existing part
+# file is rewritten in place. A new key evicts the path's older one, so
+# the memo holds one entry per path.
 # The testdata tables are read-only and the bench's sf1 replicas are
 # built before any read, so within the bench the key never churns.
 _SCHEMA_MEMO: dict = {}
@@ -149,6 +153,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         df = spark.read.parquet(path)
+        for stale in [k for k in _SCHEMA_MEMO if k[0] == path]:
+            del _SCHEMA_MEMO[stale]
         _SCHEMA_MEMO[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)

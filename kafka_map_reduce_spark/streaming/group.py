@@ -36,12 +36,19 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+# The (partition, offset) claim of a record file path, as produce() names
+# it. poll() checks each path against it on the driver and tags each row
+# with its two groups JVM-side (the pattern means the same in Java).
+_RECORD_FILE = re.compile(r"p(\d+)/(\d+)\.parquet$", re.ASCII)
 
 
 class FileTopic:
@@ -256,7 +263,19 @@ class GroupConsumer:
         tags are byte-equal to the per-file literals they replace
         (equivalence pinned in tests/test_group_rebalance.py). The
         poll/commit/revoke seams — what this simulation exists to
-        demonstrate — are untouched: batching is WITHIN one poll."""
+        demonstrate — are untouched: batching is WITHIN one poll.
+
+        Every polled path is checked on the driver to be
+        ``p<partition>/<offset>.parquet`` with the partition it was
+        listed under and the offset its position claims; anything else
+        (a stray ``*.parquet``, a gap) raises ``ValueError`` naming the
+        path, instead of reaching the read as a null tag.
+
+        Single producer schema: the multi-path read takes ONE schema,
+        inferred from a file footer without ``mergeSchema``. The topic
+        assumes every record file was written with the same schema; a
+        file with extra columns would lose them and a file missing a
+        column would read it as null."""
         paths: list[str] = []
         self._pending = {}
         for p in sorted(self.assigned):
@@ -266,6 +285,13 @@ class GroupConsumer:
             ]
             if not files:
                 continue
+            for offset, path in enumerate(files, start):
+                m = _RECORD_FILE.search(path)
+                if m is None or (int(m[1]), int(m[2])) != (p, offset):
+                    raise ValueError(
+                        f"record file {path!r} is not "
+                        f"p{p:03d}/{offset:06d}.parquet"
+                    )
             paths.extend(files)
             self._pending[p] = start + len(files)
         if not paths:
@@ -275,13 +301,11 @@ class GroupConsumer:
             self.spark.read.parquet(*paths)
             .withColumn(
                 "partition",
-                F.regexp_extract(src, r"p(\d+)/\d+\.parquet$", 1).cast(
-                    "int"
-                ),
+                F.regexp_extract(src, _RECORD_FILE.pattern, 1).cast("int"),
             )
             .withColumn(
                 "offset",
-                F.regexp_extract(src, r"/(\d+)\.parquet$", 1).cast("long"),
+                F.regexp_extract(src, _RECORD_FILE.pattern, 2).cast("long"),
             )
         )
 

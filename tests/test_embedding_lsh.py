@@ -169,6 +169,57 @@ def test_fused_embed_buckets_bit_parity(spark):
     assert got_fused == got_plain and len(got_fused) >= 12
 
 
+def test_fused_embed_faces_on_an_empty_partition(spark):
+    """Both fused embed faces over a frame with an empty partition must
+    equal the unfused faces they replace."""
+    from kafka_map_reduce_spark.operators.similarity import (
+        _normalize_arrow,
+        attach_hash_embed_with_buckets,
+        attach_hash_embed_with_unit,
+        hyperplane_buckets_all,
+    )
+    from kafka_map_reduce_spark.operators.text import attach_hash_embed_arrow
+
+    sc = spark.sparkContext
+    rows = [(i, f"alpha tok{i} beta tok{i % 3}") for i in range(7)]
+    docs = spark.createDataFrame(
+        sc.parallelize([], 1).union(sc.parallelize(rows, 2)),
+        "doc_id long, text string",
+    )
+    assert 0 in docs.rdd.glom().map(len).collect()
+    dim, bits, n_tables = 32, 16, 4
+
+    def by_id(df, cols):
+        return {
+            r["doc_id"]: tuple(
+                None if r[c] is None else tuple(r[c]) for c in cols
+            )
+            for r in df.collect()
+        }
+
+    plain = attach_hash_embed_arrow(docs, "text", "embedding", dim=dim)
+    unfused = plain.select(
+        "doc_id",
+        "embedding",
+        hyperplane_buckets_all(dim, bits, n_tables)(
+            F.col("embedding")
+        ).alias("__buckets"),
+        _normalize_arrow()(F.col("embedding")).alias("__unit"),
+    )
+    want = by_id(unfused, ["embedding", "__buckets", "__unit"])
+    assert len(want) == 7
+    buckets = attach_hash_embed_with_buckets(
+        docs, "text", dim=dim, bits=bits, n_tables=n_tables
+    )
+    assert by_id(buckets, ["embedding", "__buckets"]) == {
+        k: v[:2] for k, v in want.items()
+    }
+    unit = attach_hash_embed_with_unit(docs, "text", dim=dim)
+    assert by_id(unit, ["embedding", "__unit"]) == {
+        k: (v[0], v[2]) for k, v in want.items()
+    }
+
+
 def test_arrow_buckets_match_jvm_expression(spark, planted):
     """The vectorized Arrow signature (one numpy matmul for all T
     tables) must be bit-identical to the per-table JVM fold expression —

@@ -294,3 +294,22 @@ def test_produce_many_matches_sequential_produce(spark, tmp_path):
                 r.event_id for r in spark.read.parquet(fb).collect()
             }
             assert ids_bat == ids_seq, (p, off)
+
+
+def test_poll_rejects_a_non_conforming_record_file(spark, tmp_path):
+    """A stray ``*.parquet`` in a partition directory is not an offset
+    claim: poll must name it instead of tagging its rows with a null
+    partition/offset."""
+    import shutil as _sh
+
+    t = FileTopic(str(tmp_path / "topic"), 1)
+    t.produce(spark.range(0, 3).select(F.col("id").alias("event_id")), 0)
+    stray = t._pdir(0) + "/stray.parquet"
+    _sh.copy(t.files(0)[0], stray)
+    consumer = GroupConsumer(spark, t, GroupCoordinator(str(tmp_path / "g")))
+    consumer.assign({0})
+    with pytest.raises(ValueError, match="stray.parquet"):
+        consumer.poll(max_files_per_partition=2)
+    # the conforming prefix is still readable one file at a time
+    rows = consumer.poll(max_files_per_partition=1).collect()
+    assert {(r.partition, r.offset) for r in rows} == {(0, 0)}
