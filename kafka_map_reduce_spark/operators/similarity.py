@@ -1831,20 +1831,35 @@ def embedding_near_dup(
     signatures as an array<long> column (one bucket per table, the
     :func:`attach_hash_embed_with_buckets` /
     :func:`hyperplane_buckets_all` layout — the caller's bits/n_tables
-    must match the args here). The operator then skips its own Arrow
-    signature stage AND the separate signature materialization: the
-    single base checkpoint carries (id, vector, buckets), and the
-    signature table is a cheap JVM posexplode over it. Same
-    candidates, same pairs (fused-vs-unfused parity pinned)."""
+    must match the args here; a row whose array does not hold
+    ``n_tables`` signatures fails the job). The operator then skips its
+    own Arrow signature stage AND the separate signature
+    materialization: the single base checkpoint carries (id, vector,
+    buckets), and the signature table is a cheap JVM posexplode over
+    it. Same candidates, same pairs (fused-vs-unfused parity pinned)."""
     if buckets_col is not None:
         # One materialization carries vectors AND signatures: the cap
         # count + both self-join sides re-read the checkpoint and pay
         # only a posexplode each (JVM, no Python round trip), so the
-        # separate sigs checkpoint below is unnecessary here.
+        # separate sigs checkpoint below is unnecessary here. A signature
+        # array fused with a different n_tables would silently drop
+        # candidates, so the consumed __b column itself fails the job on
+        # a count mismatch (column pruning cannot drop the check).
+        b = F.col(buckets_col)
+        checked = F.when(
+            b.isNotNull() & (F.size(b) != n_tables),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"embedding_near_dup: {buckets_col} has "),
+                    F.size(b).cast("string"),
+                    F.lit(f" bucket signatures per row, n_tables={n_tables}"),
+                )
+            ),
+        ).otherwise(b)
         base = corpus.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("__v"),
-            F.col(buckets_col).alias("__b"),
+            checked.alias("__b"),
         ).localCheckpoint(eager=False)
         sigs = base.select("id", F.posexplode("__b").alias("tbl", "bkt"))
     else:

@@ -242,3 +242,24 @@ def test_arrow_buckets_match_jvm_expression(spark, planted):
         ).collect()
         for r in jvm:
             assert got[(r.vec_id, t)] == r.b, (r.vec_id, t)
+
+
+def test_buckets_col_with_another_table_count_fails_loudly(spark):
+    """A signature array fused with n_tables=4 handed to an operator
+    left at the default 8 must fail the job, naming both counts, rather
+    than silently probe only the tables it carries."""
+    from kafka_map_reduce_spark.operators.similarity import (
+        attach_hash_embed_with_buckets,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta tok{i % 5} gamma") for i in range(20)],
+        "doc_id long, text string",
+    )
+    emb = attach_hash_embed_with_buckets(
+        docs, "text", dim=32, bits=16, n_tables=4
+    ).select(F.col("doc_id").alias("vec_id"), "embedding", "__buckets")
+    with pytest.raises(Exception, match=r"__buckets has 4 .*n_tables=8"):
+        embedding_near_dup(
+            emb, dim=32, threshold=0.95, buckets_col="__buckets"
+        ).collect()

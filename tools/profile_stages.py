@@ -5,7 +5,7 @@ Usage: python tools/profile_stages.py <query> [query ...]
 For each query: one warm-up materialization, then a profiled run that
 reports plan-build wall, total wall, and each completed stage's
 executorRunTime / input / shuffle read+write bytes (from the
-AppStatusStore, same introspection as bench.task_seconds).
+AppStatusStore; ``stage_rows`` is the repository's one walk of it).
 """
 
 from __future__ import annotations

@@ -4,9 +4,9 @@ Usage: python tools/qtime.py <n_runs> <query> [query ...]
 
 Times each named query min-of-n (and median) against
 $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS], with a
-JVM/Python warm-up pass first — the same methodology as bench.py but
-without its calibration protocol, for fast inner-loop measurement.
-Prints one JSON line per query.
+JVM/Python warm-up pass first — the same methodology as bench.py's
+headline set. Prints one JSON line per query. tools/ab.py drives it,
+one process per side, for interleaved A/Bs between two commits.
 """
 
 from __future__ import annotations

@@ -939,131 +939,18 @@ def ensure_relational(spark, out_dir: str, replicas: int) -> None:
         f.write("ok\n")
 
 
-# --- recurring attribution probe (folded from the r14/r16 one-off ----------
-# tools in r17, per the r16 verdict item #7): the wall-vs-host-probe
-# no-intercept fit with per-point leave-one-out residuals — the playbook
-# every excursion adjudication since r14 has run (r14 q_agg_group cpu
-# fit, r16 cpu-axis attribution, r17 q_heavy_hitters par-capacity
-# correlation). Reads the pinned BENCH_r*.json artifacts; no Spark.
-
-
-def host_probe_snapshot() -> dict:
-    """One single-thread + one 32-way par sample (bench.cpu_probe /
-    cpu_par_probe): the capacity readout the r17 heavy-hitters
-    attribution showed the battery's 100x walls track
-    (SCALE_SPOT_r17 capacity_correlation: wall/par constant at k~46-51
-    across a 1.9x capacity swing, while neither the r9 nor the r16
-    battery session recorded any probe). Stamped at battery start/end
-    and before each heavy section so every cross-round wall comparison
-    carries its own capacity context."""
-    import bench
-
-    return {
-        "cpu": round(bench.cpu_probe(1)[0], 3),
-        "par": round(bench.cpu_par_probe(1)[0], 3),
-    }
-
-
-def attribution_history(query: str, axis_key: str) -> list[dict]:
-    """(file, probe, wall) from every sf0.1 BENCH_r*.json carrying both
-    ``calibration[axis_key]`` and ``queries[query]`` — fit inputs read
-    from artifacts, not remembered."""
-    rows = []
-    for f in sorted(os.listdir(REPO)):
-        if not (f.startswith("BENCH_r") and f.endswith(".json")):
-            continue
-        try:
-            doc = json.load(open(os.path.join(REPO, f)))
-        except (json.JSONDecodeError, OSError):
-            continue
-        parsed = doc.get("parsed", doc)
-        if not isinstance(parsed, dict) or parsed.get("sf") != 0.1:
-            continue
-        cal = parsed.get("calibration") or {}
-        q = parsed.get("queries") or {}
-        if cal.get(axis_key) and query in q:
-            rows.append({"file": f, "probe": cal[axis_key], "wall": q[query]})
-    return rows
-
-
-def fit_no_intercept(points: list) -> dict:
-    """Least-squares slope of wall = slope * probe through the origin,
-    with per-point residuals. Existence checks are explicit (ADVICE r16
-    #2): a 0.0 slope is a real degenerate fit, not a missing one."""
-    sxx = sum(x * x for x, _ in points)
-    sxy = sum(x * y for x, y in points)
-    slope = sxy / sxx if sxx > 0 else None
-    resid = []
-    if slope is not None:
-        resid = [
-            round((y - slope * x) / (slope * x), 4) if slope * x != 0 else None
-            for x, y in points
-        ]
-    return {
-        "slope": round(slope, 4) if slope is not None else None,
-        "residuals": resid,
-    }
-
-
-def loo_residuals(points: list) -> list:
-    """Per-point leave-one-out residuals (ADVICE r16 #1): each point is
-    judged against a fit over the OTHER points only, so an excursion
-    under test cannot inflate the slope and shrink its own residual."""
-    out = []
-    for i, (x, y) in enumerate(points):
-        fit = fit_no_intercept([p for j, p in enumerate(points) if j != i])
-        s = fit["slope"]
-        out.append(
-            round((y - s * x) / (s * x), 4)
-            if s is not None and s * x != 0
-            else None
-        )
-    return out
-
-
-def attribution_fit(query: str, axis_key: str = "cpu_sec") -> dict:
-    """The full probe: history + in-sample fit + LOO residuals. A point
-    whose LOO residual sits far outside the others' band on
-    byte-identical code is a host excursion, not an engine change (the
-    r16 verdict shape); re-run the query idle to confirm."""
-    hist = attribution_history(query, axis_key)
-    pts = [(h["probe"], h["wall"]) for h in hist]
-    fit = fit_no_intercept(pts)
-    loo = loo_residuals(pts)
-    return {
-        "metric": "attribution_fit",
-        "query": query,
-        "axis_key": axis_key,
-        **fit,
-        "loo_residuals": loo,
-        "by_file": {
-            h["file"]: {"in_sample": fit["residuals"][i], "loo": loo[i]}
-            for i, h in enumerate(hist)
-        },
-        "n_points": len(pts),
-    }
-
-
 def main() -> int:
     """Usage: python tools/scale_spot.py [n_runs] [--sections=a,b,...]
-                                         [--attribution=query[:axis_key]]
 
     --sections picks from ALL_SECTIONS; the bare default runs
     DEFAULT_SECTIONS (the recurring ~30 min sf1/sf10 battery). The
     heavy one-off *100 witnesses run only when named, or via
-    --sections=all. --attribution runs ONLY the Spark-free
-    wall-vs-probe fit (axis_key defaults to cpu_sec; cpu_par_sec and
-    scan_sec are the other recorded axes) and exits."""
+    --sections=all."""
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     opts = [a for a in sys.argv[1:] if a.startswith("--")]
     n_runs = int(args[0]) if args else 2
     sections = set(DEFAULT_SECTIONS)
     for o in opts:
-        if o.startswith("--attribution="):
-            spec = o.split("=", 1)[1]
-            query, _, axis_key = spec.partition(":")
-            print(json.dumps(attribution_fit(query, axis_key or "cpu_sec")))
-            return 0
         if o.startswith("--sections="):
             raw = o.split("=", 1)[1]
             if raw == "all":
@@ -1123,10 +1010,7 @@ def main() -> int:
         "table_build_sec": build_s,
         "sections": sorted(sections),
     }
-    # capacity context per section (see host_probe_snapshot)
-    probes = result["host_probes"] = {"battery_start": host_probe_snapshot()}
     if "queries" in sections:
-        probes["queries"] = host_probe_snapshot()
         sf1_times = run_set(sf1_dir)
         sf10_times = run_set(sf10_dir)
         result["sf1"] = sf1_times
@@ -1156,7 +1040,6 @@ def main() -> int:
             },
         }
     if "ann" in sections:
-        probes["ann"] = host_probe_snapshot()
         result["ann_candidate_audit"] = {
             "sf1": ann_candidate_audit(spark, sf1_dir),
             "sf10": ann_candidate_audit(spark, sf10_dir),
@@ -1212,7 +1095,6 @@ def main() -> int:
     # answers the judge's actual question). Build cost is reported so
     # the artifact is honest about what a run pays.
     if "maintenance100" in sections:
-        probes["maintenance100"] = host_probe_snapshot()
         sf100_dir = os.path.join(REPO, ".bench_sf100")
         t0 = time.time()
         ensure_sf10(spark, sf1_dir, sf100_dir, replicas=100)
@@ -1225,7 +1107,6 @@ def main() -> int:
     # r9: the capped dedup family + pipeline staples at 100x (see
     # QUERIES_100X for the selection rationale)
     if "queries100" in sections:
-        probes["queries100"] = host_probe_snapshot()
         sf100_dir = os.path.join(REPO, ".bench_sf100")
         ensure_sf10(spark, sf1_dir, sf100_dir, replicas=100)
         result["queries100"] = {
@@ -1236,7 +1117,6 @@ def main() -> int:
     # within-session decade ratios are the comparable numbers — sf1
     # carries JIT warmup, see the semantic100 methodology note)
     if "text100" in sections:
-        probes["text100"] = host_probe_snapshot()
         sf100_dir = os.path.join(REPO, ".bench_sf100")
         ensure_sf10(spark, sf1_dir, sf100_dir, replicas=100)
         result["text100"] = {
@@ -1249,7 +1129,6 @@ def main() -> int:
     # lineitem rows) — facts replicated, dims verbatim (see
     # ensure_relational); same warm-session methodology as the others
     if "relational100" in sections:
-        probes["relational100"] = host_probe_snapshot()
         sf100_dir = os.path.join(REPO, ".bench_sf100")
         ensure_sf10(spark, sf1_dir, sf100_dir, replicas=100)
         rel = {"replicas_of_sf01": {"sf1": 10, "sf10": 100, "sf100": 1000}}
@@ -1263,7 +1142,6 @@ def main() -> int:
         result["relational100"] = rel
     # r9: event/stream analytics at 1x/10x/100x (events 1M/10M/100M)
     if "events100" in sections:
-        probes["events100"] = host_probe_snapshot()
         sf100_dir = os.path.join(REPO, ".bench_sf100")
         ensure_sf10(spark, sf1_dir, sf100_dir, replicas=100)
         result["events100"] = {
@@ -1276,7 +1154,6 @@ def main() -> int:
     # — the measured alternative closing the events100 stream_dedup
     # spill-cliff diagnosis
     if "watermark_dedup100" in sections:
-        probes["watermark_dedup100"] = host_probe_snapshot()
         sf100_dir = os.path.join(REPO, ".bench_sf100")
         ensure_sf10(spark, sf1_dir, sf100_dir, replicas=100)
         result["watermark_dedup100"] = {
@@ -1297,7 +1174,6 @@ def main() -> int:
             / max(result["watermark_dedup100"]["sf10"]["wall_sec"], 1e-9),
             2,
         )
-    probes["battery_end"] = host_probe_snapshot()
     print(json.dumps(result))
     return 0
 
